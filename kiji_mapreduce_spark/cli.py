@@ -26,7 +26,7 @@ import json
 import os
 import sys
 
-from kiji_mapreduce_spark.io.inputs import job_input
+from kiji_mapreduce_spark.io.inputs import job_input, read_parquet
 from kiji_mapreduce_spark.io.outputs import bulk_load, job_output
 from kiji_mapreduce_spark.job import (
     BulkImportJobBuilder, GatherJobBuilder, JobHistory, MapReduceJobBuilder,
@@ -1002,8 +1002,8 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         # not a mid-job traceback (the --splits discipline)
         ratio_bounds = _parse_ratio_bounds(p, args.compress_ratio)
         spark = make_session(app_name="kiji-curate")
-        docs = spark.read.parquet(args.input)
-        bench = (spark.read.parquet(args.benchmark)
+        docs = read_parquet(spark, args.input)
+        bench = (read_parquet(spark, args.benchmark)
                  if args.benchmark else None)
         rates = {}
         if args.rates:
@@ -1031,11 +1031,11 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
             survivor_by_quality=args.survivor_by_quality,
             compress_ratio_bounds=ratio_bounds,
             max_ppl=args.max_ppl,
-            ppl_reference=(spark.read.parquet(args.ppl_reference)
+            ppl_reference=(read_parquet(spark, args.ppl_reference)
                            if args.ppl_reference else None))
         out = curate.curate_corpus(docs, benchmark=bench, config=cfg)
         out.write.mode("overwrite").parquet(args.output)
-        n_in, n_out = docs.count(), spark.read.parquet(args.output).count()
+        n_in, n_out = docs.count(), read_parquet(spark, args.output).count()
         return _emit(args, {"curated": args.output, "docs_in": n_in,
                             "docs_out": n_out})
 
@@ -1045,7 +1045,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline import bpe
 
         spark = make_session(app_name="kiji-bpe-train")
-        docs = spark.read.parquet(args.input)
+        docs = read_parquet(spark, args.input)
         if args.text_col not in docs.columns:
             p.error(f"bpe-train: no column {args.text_col!r} in "
                     f"{args.input}")
@@ -1060,7 +1060,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
             counts = bpe.bpe_token_counts(docs, merges,
                                           text_col=args.text_col)
             counts.write.mode("overwrite").parquet(args.token_counts)
-            agg = spark.read.parquet(args.token_counts) \
+            agg = read_parquet(spark, args.token_counts) \
                 .agg(F.sum("n_bpe_tokens")).collect()[0][0]
             stats["token_counts"] = args.token_counts
             stats["n_tokens_total"] = int(agg or 0)
@@ -1121,7 +1121,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
             edges = edges.localCheckpoint(eager=True)
         edges.write.mode("overwrite").parquet(args.output)
         stats = {"edges": args.output,
-                 "n_edges": spark.read.parquet(args.output).count()}
+                 "n_edges": read_parquet(spark, args.output).count()}
         if args.pagerank:
             from kiji_mapreduce_spark.pipeline import graph
 
@@ -1131,8 +1131,8 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
             ).withColumnRenamed("node", "domain")
             ranks.write.mode("overwrite").parquet(args.pagerank)
             stats["pagerank"] = args.pagerank
-            stats["n_domains"] = spark.read.parquet(
-                args.pagerank).count()
+            stats["n_domains"] = read_parquet(
+                spark, args.pagerank).count()
         return _emit(args, stats)
 
     if args.command == "span-dedup":
@@ -1141,12 +1141,12 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline import dedup as dedup_mod
 
         spark = make_session(app_name="kiji-span-dedup")
-        docs = spark.read.parquet(args.input)
+        docs = read_parquet(spark, args.input)
         out = dedup_mod.c4_span_dedup(
             docs, text_col=args.text_col, id_col=args.id_col,
             span_sentences=args.sentences)
         out.write.mode("overwrite").parquet(args.output)
-        res = spark.read.parquet(args.output)
+        res = read_parquet(spark, args.output)
         n_dropped = res.agg(
             F.sum("c4_sentences_dropped")).collect()[0][0] or 0
         return _emit(args, {"deduped": args.output,
@@ -1159,12 +1159,12 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline import dedup as dedup_mod
 
         spark = make_session(app_name="kiji-substr-dedup")
-        docs = spark.read.parquet(args.input)
+        docs = read_parquet(spark, args.input)
         out = dedup_mod.exact_substring_dedup(
             docs, text_col=args.text_col, id_col=args.id_col,
             min_tokens=args.min_tokens)
         out.write.mode("overwrite").parquet(args.output)
-        res = spark.read.parquet(args.output)
+        res = read_parquet(spark, args.output)
         n_dropped = res.agg(
             F.sum("tokens_dropped")).collect()[0][0] or 0
         return _emit(args, {"deduped": args.output,
@@ -1175,14 +1175,14 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline import dsir
 
         spark = make_session(app_name="kiji-dsir")
-        raw = spark.read.parquet(args.raw)
-        target = spark.read.parquet(args.target)
+        raw = read_parquet(spark, args.raw)
+        target = read_parquet(spark, args.target)
         picked = dsir.dsir_resample(
             raw, target, k=args.k, text_col=args.text_col,
             id_col=args.id_col, dim=args.dim,
             smoothing=args.smoothing, seed=args.seed)
         picked.write.mode("overwrite").parquet(args.output)
-        n_out = spark.read.parquet(args.output).count()
+        n_out = read_parquet(spark, args.output).count()
         return _emit(args, {"selected": args.output, "k": args.k,
                             "docs_out": n_out, "dim": args.dim})
 
@@ -1190,7 +1190,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline import classifier
 
         spark = make_session(app_name="kiji-classify-train")
-        docs = spark.read.parquet(args.input)
+        docs = read_parquet(spark, args.input)
         feats = classifier.hashed_features(
             docs, text_col=args.text_col, id_col=args.id_col,
             dim=args.dim)
@@ -1211,7 +1211,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
 
         spark = make_session(app_name="kiji-classify-score")
         model = json.load(open(args.model))
-        docs = spark.read.parquet(args.input)
+        docs = read_parquet(spark, args.input)
         feats = classifier.hashed_features(
             docs, text_col=args.text_col, id_col=args.id_col,
             dim=model["dim"])
@@ -1221,9 +1221,9 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         scored.write.mode("overwrite").parquet(args.output)
         out = {"scored": args.output}
         if args.eval_labels:
-            labels = spark.read.parquet(args.eval_labels)
+            labels = read_parquet(spark, args.eval_labels)
             m = classifier.binary_metrics(
-                spark.read.parquet(args.output), labels,
+                read_parquet(spark, args.output), labels,
                 id_col=args.id_col).first()
             out["metrics"] = {k: m[k] for k in
                               ("n", "n_pos", "auc", "accuracy",
@@ -1234,7 +1234,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline import sketch as sketch_ops
 
         spark = make_session(app_name="kiji-sketch")
-        df = spark.read.parquet(args.input)
+        df = read_parquet(spark, args.input)
         if args.kind == "countmin":
             out = sketch_ops.countmin_table(
                 df, args.value_col, depth=args.depth, width=args.width)
@@ -1246,7 +1246,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         out.write.mode("overwrite").parquet(args.output)
         return _emit(args, {
             "sketch": args.output, "kind": args.kind,
-            "rows": spark.read.parquet(args.output).count()})
+            "rows": read_parquet(spark, args.output).count()})
 
     if args.command == "split":
         from pyspark.sql import functions as F
@@ -1256,11 +1256,11 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
 
         splits = _parse_splits(p, args.splits)
         spark = make_session(app_name="kiji-split")
-        docs = spark.read.parquet(args.input)
+        docs = read_parquet(spark, args.input)
         assigned = split_assign(docs, splits, key_col=args.key_col,
                                 seed=args.seed)
         assigned.write.mode("overwrite").parquet(args.output)
-        written = spark.read.parquet(args.output)
+        written = read_parquet(spark, args.output)
         out = {"output": args.output,
                "counts": {r["split"]: r["n"] for r in
                           written.groupBy("split")
@@ -1314,14 +1314,14 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         rows.write.mode("overwrite").parquet(args.output)
         stats = {
             "rows": args.output, "format": args.shard_format,
-            "n_rows": spark.read.parquet(args.output).count()}
+            "n_rows": read_parquet(spark, args.output).count()}
         if args.manifest:
             # per-SOURCE-shard bookkeeping (path, n_rows, n_bytes)
             # from the already-written output — one cheap aggregation,
             # the training-loader manifest convention
             from pyspark.sql import functions as F
 
-            out = spark.read.parquet(args.output)
+            out = read_parquet(spark, args.output)
             if args.shard_format == "webdataset":
                 nbytes = F.aggregate(
                     F.map_values(F.col("sample")),
@@ -1334,8 +1334,8 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
                      F.sum(nbytes).alias("n_bytes"))
                 .write.mode("overwrite").parquet(args.manifest))
             stats["manifest"] = args.manifest
-            stats["n_shards"] = spark.read.parquet(
-                args.manifest).count()
+            stats["n_shards"] = read_parquet(
+                spark, args.manifest).count()
         return _emit(args, stats)
 
     if args.command == "webdataset-pack":
@@ -1343,7 +1343,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
             write_webdataset
 
         spark = make_session(app_name="kiji-webdataset-pack")
-        samples = spark.read.parquet(args.input)
+        samples = read_parquet(spark, args.input)
         manifest = write_webdataset(
             samples, args.output, key_col=args.key_col,
             sample_col=args.sample_col, shard_bytes=args.shard_bytes,
@@ -1380,15 +1380,15 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
             records = read_warc_raw(spark, [args.input])
             raw_col = "record"
             if args.keep_ids:
-                keep = spark.read.parquet(args.keep_ids) \
+                keep = read_parquet(spark, args.keep_ids) \
                     .select("doc_id").distinct()
                 records = records.join(keep, "doc_id", "left_semi")
             if args.drop_ids:
-                drop = spark.read.parquet(args.drop_ids) \
+                drop = read_parquet(spark, args.drop_ids) \
                     .select("doc_id").distinct()
                 records = records.join(drop, "doc_id", "left_anti")
         else:
-            records = spark.read.parquet(args.input)
+            records = read_parquet(spark, args.input)
         manifest = write_warc(
             records, args.output, compression=args.compression,
             shard_bytes=args.shard_bytes, n_shards=args.n_shards,
@@ -1629,7 +1629,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
                         if args.splits else None))
             docs = cur_mod.curate_corpus(docs, config=cfg)
         docs.write.mode("overwrite").parquet(args.output)
-        out = spark.read.parquet(args.output)
+        out = read_parquet(spark, args.output)
         rej = dict(rej_obs.get) if rej_obs is not None else {}
         n_rejected = int(rej.get("CRAWL_RECORDS_REJECTED_ENCODED") or 0)
         stats = {
@@ -1675,8 +1675,8 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
             dedup.minhash_index(out).write.mode("overwrite") \
                 .parquet(args.dedup_index)
             stats["dedup_index"] = args.dedup_index
-            stats["index_rows"] = spark.read.parquet(
-                args.dedup_index).count()
+            stats["index_rows"] = read_parquet(
+                spark, args.dedup_index).count()
         if args.media_output:
             # second output = one more pass over the archives (the
             # Common Crawl WET/WAT precedent: derived views are extra
@@ -1701,7 +1701,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
                     url_patterns=block_urls, id_col="media_id")
             media_rows.write.mode("overwrite").parquet(
                 args.media_output)
-            media = spark.read.parquet(args.media_output)
+            media = read_parquet(spark, args.media_output)
             stats["media"] = args.media_output
             stats["media_counts"] = {
                 r["kind"]: r["n"] for r in media.groupBy("kind")
@@ -1714,7 +1714,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark import audit
 
         spark = make_session(app_name="kiji-corpus-stats")
-        df = spark.read.parquet(args.input)
+        df = read_parquet(spark, args.input)
         domain_col = None if args.domain_col.lower() == "none" \
             else args.domain_col
         if args.media:
@@ -1813,8 +1813,8 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark import audit
 
         spark = make_session(app_name="kiji-drift")
-        before = spark.read.parquet(args.before)
-        after = spark.read.parquet(args.after)
+        before = read_parquet(spark, args.before)
+        after = read_parquet(spark, args.after)
         try:
             row = audit.distribution_drift(
                 before, after, args.col, bins=args.bins,
@@ -1833,7 +1833,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline.dedup import semantic_dedup
 
         spark = make_session(app_name="kiji-semantic-dedup")
-        emb = spark.read.parquet(args.input)
+        emb = read_parquet(spark, args.input)
         for col in (args.id_col, args.vec_col):
             if col not in emb.columns:
                 p.error(f"semantic-dedup: no column {col!r} in "
@@ -1864,7 +1864,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline import multimodal
 
         spark = make_session(app_name="kiji-media-dedup")
-        media = spark.read.parquet(args.input)
+        media = read_parquet(spark, args.input)
         if "kind" in media.columns:
             # a crawl_media table mixes image/audio/video rows; without
             # this the image decoder would hit the first WAV body and
@@ -1927,9 +1927,9 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
                 f"{args.index}/batch_id={batch_token}")
             return _emit(args, {
                 "pairs": args.output, "kind": args.kind,
-                "n_pairs": spark.read.parquet(args.output).count(),
+                "n_pairs": read_parquet(spark, args.output).count(),
                 "index": args.index,
-                "index_rows": spark.read.parquet(args.index).count()})
+                "index_rows": read_parquet(spark, args.index).count()})
         try:
             if args.kind == "video":
                 pairs = multimodal.video_near_duplicates(
@@ -1956,7 +1956,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         pairs.write.mode("overwrite").parquet(args.output)
         return _emit(args, {
             "pairs": args.output, "kind": args.kind,
-            "n_pairs": spark.read.parquet(args.output).count()})
+            "n_pairs": read_parquet(spark, args.output).count()})
 
     if args.command == "media-probe":
         from pyspark.sql import functions as F
@@ -1964,11 +1964,11 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline import multimodal
 
         spark = make_session(app_name="kiji-media-probe")
-        media = spark.read.parquet(args.input)
+        media = read_parquet(spark, args.input)
         probed = multimodal.media_probe(
             media, content_col=args.content_col, id_col=args.id_col)
         probed.write.mode("overwrite").parquet(args.output)
-        out = spark.read.parquet(args.output)
+        out = read_parquet(spark, args.output)
         by_container = {
             r["container"] or "unknown": r["n"]
             for r in out.groupBy("container")
@@ -1987,7 +1987,7 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         except ValueError:
             p.error('--grid must be a comma list of ints, e.g. "1,2,4"')
         spark = make_session(app_name="kiji-ann-tune")
-        emb = spark.read.parquet(args.input)
+        emb = read_parquet(spark, args.input)
         # deterministic sample: the lowest ids — re-runs tune the same set
         qs = emb.orderBy(args.id_col).limit(args.queries)
         try:
@@ -2003,14 +2003,14 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
         from kiji_mapreduce_spark.pipeline import dedup
 
         spark = make_session(app_name="kiji-dedup-index")
-        docs = spark.read.parquet(args.input)
+        docs = read_parquet(spark, args.input)
         if args.mode == "build":
             dedup.minhash_index(
                 docs, text_col=args.text_col, id_col=args.id_col
             ).write.mode("overwrite").parquet(args.index)
             return _emit(args, {
                 "index": args.index,
-                "rows": spark.read.parquet(args.index).count()})
+                "rows": read_parquet(spark, args.index).count()})
         if not args.pairs:
             p.error("--pairs is required for ingest")
         if args.updated_index and (
@@ -2021,13 +2021,13 @@ def _main(argv: list[str] | None, start_ms: int) -> int:
             # being read from") or corrupts the persisted index
             p.error("--updated-index must differ from --index "
                     "(write the new index to a fresh path, then swap)")
-        index = spark.read.parquet(args.index)
+        index = read_parquet(spark, args.index)
         pairs, batch_rows = dedup.minhash_dedup_incremental(
             docs, index, text_col=args.text_col, id_col=args.id_col,
             threshold=args.threshold, return_index=True)
         pairs.write.mode("overwrite").parquet(args.pairs)
         out = {"pairs": args.pairs,
-               "n_pairs": spark.read.parquet(args.pairs).count()}
+               "n_pairs": read_parquet(spark, args.pairs).count()}
         if args.updated_index:
             # batch_rows is the checkpointed index the dedup pass
             # already built — no second shingle scan of the batch text

@@ -17,7 +17,7 @@ to a Spark reader:
                       lineSep; Hadoop's split-spanning line reader does
                       the boundary stitching ``XMLInputFormat.java:55-66``
                       hand-rolled; records are <tag>...</tag> spans)
-- kiji (table)     -> ``spark.read.parquet(table_path)`` + DataRequest
+- kiji (table)     -> ``read_parquet(spark, table_path)`` + DataRequest
 - csv              -> bonus (the reference parsed CSV inside importers)
 - warc             -> bonus beyond the reference: web-archive records
                       (ISO 28500, the Common Crawl layout) parsed per
@@ -32,11 +32,123 @@ to a Spark reader:
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kiji_mapreduce_spark.request import DataRequest
+
+_SUMMARY_FILES = ("_common_metadata", "_metadata")
+
+
+def read_parquet(spark: SparkSession, path, schema=None,
+                 options: dict | None = None) -> DataFrame:
+    """Open a parquet path without running a Spark job. The package's
+    one way to open parquet.
+
+    ``spark.read.parquet`` infers the schema with a Spark job that reads
+    a footer. Here the schema comes from elsewhere:
+
+    - ``schema`` given (e.g. an entity table's layout): no footer is read.
+    - otherwise one footer is read on the driver, through Spark's own
+      footer reader and Parquet-to-Spark converter with the session
+      conf (``nanosAsLong``, ``binaryAsString`` and int96 as in
+      inference). Spark's order for a non-merged inference picks the
+      footer: ``_common_metadata``, then ``_metadata``, then the first
+      data file in path order.
+
+    Either way partition columns (``_bucket=``, ``_batch=``) still come
+    from Spark's directory discovery. A path with no footer (empty,
+    missing, a glob), several paths, reader ``options`` or
+    ``spark.sql.parquet.mergeSchema`` keep Spark's own inference, so
+    they fail or merge exactly as ``spark.read.parquet`` does.
+    """
+    paths = [path] if isinstance(path, str) else list(path)
+    reader = spark.read.options(**options) if options else spark.read
+    if schema is None and not options and len(paths) == 1:
+        schema = _footer_schema(spark, paths[0])
+    if schema is not None:
+        reader = reader.schema(schema)
+    return reader.parquet(*paths)
+
+
+def _footer_schema(spark: SparkSession, path: str):
+    """The data schema Spark's non-merged inference would give ``path``,
+    read from one footer on the driver; None when inference must run."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.sql.types import _parse_datatype_json_string
+
+    if any(c in path for c in "*?[{") or spark.conf.get(
+            "spark.sql.parquet.mergeSchema", "false").lower() == "true":
+        return None
+    footer = _footer_file(spark, path)
+    if footer is None:
+        return None
+    jvm, jsession = spark._jvm, spark._jsparkSession
+    conf = jsession.sessionState().newHadoopConf()
+    hpath = jvm.org.apache.hadoop.fs.Path(footer)
+    parquet = getattr(jvm.org.apache.spark.sql.execution.datasources.parquet,
+                      "ParquetFileFormat$").__getattr__("MODULE$")
+    ignore_corrupt = spark.conf.get(
+        "spark.sql.files.ignoreCorruptFiles", "false").lower() == "true"
+    try:
+        status = hpath.getFileSystem(conf).getFileStatus(hpath)
+        footers = parquet.readParquetFootersInParallel(
+            conf, jvm.PythonUtils.toSeq([status]), ignore_corrupt)
+        found = parquet.readSchema(footers, jsession)
+    except Py4JJavaError:
+        return None  # unreadable footer: inference raises Spark's error
+    return (_parse_datatype_json_string(found.get().json())
+            if found.isDefined() else None)
+
+
+def _footer_file(spark: SparkSession, path: str) -> str | None:
+    """The file whose footer Spark's non-merged parquet inference reads
+    (``ParquetUtils.inferSchema``), listed with the file index's name
+    filter: ``_``/``.`` names are hidden except partition directories
+    and the summary files. None when ``path`` holds no such file."""
+    from kiji_mapreduce_spark.io.outputs import (
+        _hadoop_fs, _is_local_path, _strip_file_scheme,
+    )
+
+    if _is_local_path(path):
+        root = os.path.abspath(_strip_file_scheme(path))
+        if not os.path.isdir(root):
+            return "file://" + root if os.path.isfile(root) else None
+
+        def children(d):
+            return [(e.path, e.name, e.is_dir()) for e in os.scandir(d)]
+    else:
+        fs, hroot, HPath = _hadoop_fs(path, spark)
+        if not fs.exists(hroot):
+            return None
+        if fs.getFileStatus(hroot).isFile():
+            return path
+        root = hroot.toString()
+
+        def children(d):
+            return [(st.getPath().toString(), st.getPath().getName(),
+                     st.isDirectory()) for st in fs.listStatus(HPath(d))]
+
+    files, dirs = [], [root]
+    while dirs:
+        for full, name, is_dir in children(dirs.pop()):
+            hidden = ((name.startswith("_") and "=" not in name)
+                      or name.startswith(".") or name.endswith("._COPYING_"))
+            if hidden and not name.startswith(_SUMMARY_FILES):
+                continue
+            (dirs if is_dir else files).append(full)
+    if not files:
+        return None
+
+    def rank(f):
+        name = f.rsplit("/", 1)[-1]
+        return (_SUMMARY_FILES.index(name) if name in _SUMMARY_FILES
+                else len(_SUMMARY_FILES), f)
+
+    found = min(files, key=rank)
+    return "file://" + found if _is_local_path(path) else found
 
 
 @dataclass
@@ -86,7 +198,7 @@ class JobInput:
                                       0)) or 0),
             )
         if fmt in ("kiji", "table", "parquet"):
-            df = spark.read.options(**self.options).parquet(*self.paths)
+            df = read_parquet(spark, self.paths, options=self.options)
             return self.data_request.apply(df) if self.data_request else df
         if fmt == "csv":
             return spark.read.options(**self.options).csv(self.paths)

@@ -26,6 +26,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from kiji_mapreduce_spark.io.inputs import read_parquet
+
 
 @dataclass
 class JobOutput:
@@ -684,7 +686,7 @@ def compact_parquet(spark, path: str, target_bytes: int = 128 << 20,
     if flatten and partition_by:
         raise ValueError(
             "compact_parquet: flatten and partition_by are exclusive")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     files = df.inputFiles()
     if not files:
         raise ValueError(f"compact_parquet: no parquet files under {path}")
@@ -738,7 +740,7 @@ def compact_parquet(spark, path: str, target_bytes: int = 128 << 20,
     if partition_by:
         w = w.partitionBy(*partition_by)
     w.parquet(staging)
-    staged = spark.read.parquet(staging)
+    staged = read_parquet(spark, staging)
     staged_count = staged.count()
     if staged_count != live_count:
         fs_delete(staging, spark)

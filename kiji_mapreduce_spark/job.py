@@ -24,6 +24,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+from kiji_mapreduce_spark.io.inputs import read_parquet
 from kiji_mapreduce_spark.io.outputs import JobOutput
 from kiji_mapreduce_spark.kvstore import bind_stores
 from kiji_mapreduce_spark.operators.base import Operator, OperatorContext
@@ -53,7 +54,7 @@ class JobHistory:
         df.write.mode("append").parquet(self.path)
 
     def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path)
+        return read_parquet(spark, self.path)
 
 
 class Job:

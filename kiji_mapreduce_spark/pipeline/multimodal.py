@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     BinaryType, IntegerType, LongType, StringType, StructField, StructType,
 )
 
+from kiji_mapreduce_spark.io.inputs import read_parquet
+
 MEDIA_META_SCHEMA = StructType([
     StructField("media_type", StringType()),   # image | audio | video
     StructField("format", StringType()),       # jpeg | png | wav | mp4 ...
@@ -596,7 +598,7 @@ def read_code_index(spark, path: str):
     from pyspark.errors import AnalysisException
 
     try:
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:

@@ -14,6 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+from kiji_mapreduce_spark.io.inputs import read_parquet
+
 # Defaults chosen for a large cluster; local test runs override
 # master/partitions via env. Every value here is also safe on local[N].
 _SCALE_DEFAULTS = {
@@ -90,7 +92,7 @@ def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None
     for name in names:
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.exists(path):
-            df = spark.read.parquet(path)
+            df = read_parquet(spark, path)
             df.createOrReplaceTempView(name)
             out[name] = df
     return out

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from kiji_mapreduce_spark.functions import lit_array
+from kiji_mapreduce_spark.io.inputs import read_parquet
 from kiji_mapreduce_spark.operators.base import Operator, OperatorContext
 
 
@@ -778,7 +779,7 @@ def stream_crawl_ingest(
             # (r9 verdict #6)
             _upsert_batch_stat(batch_stats, {
                 "batch_id": batch_id,
-                "n_docs": batch_df.sparkSession.read.parquet(part)
+                "n_docs": read_parquet(batch_df.sparkSession, part)
                 .count()})
 
     return _start_foreach_batch(files, _process, checkpoint,
@@ -850,7 +851,7 @@ def stream_shard_ingest(
         if batch_stats is not None:
             _upsert_batch_stat(batch_stats, {
                 "batch_id": batch_id,
-                "n_rows": batch_df.sparkSession.read.parquet(part)
+                "n_rows": read_parquet(batch_df.sparkSession, part)
                 .count()})
 
     return _start_foreach_batch(files, _process, checkpoint,

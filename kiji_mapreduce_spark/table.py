@@ -20,6 +20,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from kiji_mapreduce_spark import cells as cell_fns
+from kiji_mapreduce_spark.io.inputs import read_parquet
 from kiji_mapreduce_spark.io.outputs import bulk_load, swap_partition_dirs
 from kiji_mapreduce_spark.layout import TableLayout
 
@@ -70,18 +71,30 @@ class EntityTable:
     def _data_path(self) -> str:
         return os.path.join(self.path, "data")
 
+    def _read_data(self) -> DataFrame:
+        """The data directory, opened with the layout's schema: no
+        footer is read (a Kiji table opens with its stored layout) and
+        ``_bucket`` comes from partition discovery. A data dir with no
+        files yet reads as the layout's empty table."""
+        return read_parquet(self.spark, self._data_path(),
+                            schema=self.layout.spark_schema())
+
     def _physical_schema(self):
         from pyspark.sql.types import IntegerType
 
         schema = self.layout.spark_schema()
         return schema.add("_bucket", IntegerType(), False)
 
-    def _bucket_expr(self):
+    def _bucket_expr(self, packed_key=None):
         """Deterministic key bucket from the row-key hash — the analogue of
         region assignment; co-locates a key's writes and enables
-        bucket-pruned point lookups."""
+        bucket-pruned point lookups. ``packed_key`` defaults to the
+        row's own packed key; a point lookup passes its literals'."""
+        row_key = self.layout.row_key
+        if packed_key is None:
+            packed_key = row_key.key_expr()
         return F.pmod(
-            F.crc32(self.layout.row_key.hash_expr()), F.lit(self.n_buckets)
+            F.crc32(row_key.hash_of(packed_key)), F.lit(self.n_buckets)
         ).cast("int")
 
     # -- read ---------------------------------------------------------------
@@ -90,19 +103,7 @@ class EntityTable:
         merge-on-read view (base + fragments, ``_merge_view``);
         ``merge_deltas=False`` is the read-optimized view (base files
         only — what a flushed table always serves)."""
-        try:
-            base = self.spark.read.parquet(self._data_path()).drop("_bucket")
-        except Exception as e:
-            # a table whose last rows were deleted (or a created-but-
-            # never-written table) has a data dir with no parquet
-            # footers — serve the layout's empty schema instead of an
-            # unreadable table (r5 review finding)
-            msg = str(e)
-            if ("UNABLE_TO_INFER_SCHEMA" not in msg
-                    and "Unable to infer schema" not in msg):
-                raise
-            base = self.spark.createDataFrame(
-                [], self.layout.spark_schema())
+        base = self._read_data().drop("_bucket")
         if merge_deltas and self._has_deltas():
             return self._merge_view(base, self._read_delta().drop("_bucket"))
         return base
@@ -162,28 +163,22 @@ class EntityTable:
         return [F.lit(v).cast(f.dataType)
                 for f, v in zip(fields, components)]
 
-    def _bucket_of(self, lits) -> int:
-        """Bucket id for a point lookup, computed by the SAME Spark
-        expression pipeline as the write path (one 1-row local job —
-        constant cost, no table scan)."""
-        packed = self.layout.row_key.pack([l.cast("string") for l in lits])
-        expr = F.pmod(
-            F.crc32(self.layout.row_key.hash_of(packed)),
-            F.lit(self.n_buckets)).cast("int")
-        return self.spark.range(1).select(expr.alias("b")).first()["b"]
-
     def get(self, *components) -> DataFrame:
-        """Point lookup by entity-id components: computes the key's
-        bucket and filters on the partition column first, so the scan
-        prunes to one bucket directory before touching row data. With a
-        delta log present, the same bucket-pruned filter runs on the
-        (tiny) fragment set and the merge applies to this one key."""
+        """Point lookup by entity-id components: filters the partition
+        column on the key's bucket first, so the scan prunes to one
+        bucket directory before touching row data. The bucket is the
+        write path's expression over literals, which Catalyst folds to
+        a constant (``PartitionFilters: [(_bucket = 15)]``) — no job
+        runs to compute it. With a delta log present, the same
+        bucket-pruned filter runs on the (tiny) fragment set and the
+        merge applies to this one key."""
         lits = self._key_literals(components)
-        bucket = self._bucket_of(lits)
+        bucket = self._bucket_expr(
+            self.layout.row_key.pack([l.cast("string") for l in lits]))
         cond = F.lit(True)
         for f, lit in zip(self.layout.row_key.spark_type().fields, lits):
             cond = cond & (F.col(f"entity_id.{f.name}").eqNullSafe(lit))
-        raw = self.spark.read.parquet(self._data_path())
+        raw = self._read_data()
         if "_bucket" in raw.columns:
             raw = raw.filter(F.col("_bucket") == bucket)
         row = raw.filter(cond).drop("_bucket")
@@ -214,7 +209,7 @@ class EntityTable:
 
     def _read_buckets(self, buckets: list[int]) -> DataFrame:
         """Partition-pruned read of only the given bucket directories."""
-        raw = self.spark.read.parquet(self._data_path())
+        raw = self._read_data()
         return raw.filter(F.col("_bucket").isin(list(buckets))).drop("_bucket")
 
     def _affected_buckets(self, df: DataFrame) -> list[int]:
@@ -424,7 +419,7 @@ class EntityTable:
     def _read_delta(self) -> DataFrame:
         # _batch is write-side replay bookkeeping (see put_delta);
         # fragment ordering travels as the _seq data column
-        return self.spark.read.parquet(self._delta_path()).drop("_batch")
+        return read_parquet(self.spark, self._delta_path()).drop("_batch")
 
     def put_delta(self, puts: DataFrame,
                   batch_id: int | None = None) -> None:
@@ -767,8 +762,8 @@ class EntityTable:
         staged_deletes = None
         if fs_exists(deletes_path, self.spark):
             # pin the tombstone CONTENTS before any path mutation
-            staged_deletes = self.spark.read.parquet(
-                deletes_path).localCheckpoint(eager=True)
+            staged_deletes = read_parquet(
+                self.spark, deletes_path).localCheckpoint(eager=True)
         has_rows = any(
             name.startswith("_bucket=") or name.endswith(".parquet")
             for name in fs_listdir(staging_path, self.spark)) if fs_exists(
